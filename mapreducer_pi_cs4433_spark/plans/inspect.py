@@ -63,9 +63,3 @@ def whole_stage_codegen_ids(df: DataFrame) -> list[int]:
     with contextlib.redirect_stdout(buf):
         df.explain()
     return sorted({int(m) for m in re.findall(r"\*\((\d+)\)", buf.getvalue())})
-
-
-def uses_collect_free_scalar(df: DataFrame) -> bool:
-    """True if the plan broadcasts 1-row aggregates (the crossJoin-of-scalar
-    pattern replacing the reference's driver-side readback)."""
-    return "BroadcastNestedLoopJoin" in formatted_plan(df) or has_broadcast_join(df)

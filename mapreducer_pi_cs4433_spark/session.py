@@ -11,6 +11,26 @@ configuration lets Catalyst/AQE make those calls per-query instead:
   with DuckDB's naive-as-UTC semantics regardless of host TZ.
 - Arrow enabled: any Pandas-UDF path (similarity, multimodal) transfers
   columnar batches instead of pickled rows.
+
+Two shuffle partition numbers, because batch and streaming plans read the
+setting differently:
+
+- Batch plans run under AQE with coalescing on, so Spark sizes their
+  exchanges from ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``
+  (``SPARK_GRAFT_SHUFFLE_PARTITIONS``, default 32) and coalesces down at
+  runtime.
+- Streaming plans run with AQE off, so ``spark.sql.shuffle.partitions`` is
+  the fixed number of state-store partitions of every stateful operator,
+  and of the batch DataFrames a ``foreachBatch`` sink sees. Each micro-batch
+  pays one task and one state-store commit per partition, whether or not
+  the partition holds a key, so it is set to one partition per core
+  (``defaultParallelism``: the local core count, or the executor cores
+  registered when the session starts on a cluster).
+
+A stream records its partition count in the checkpoint's offset log on
+its first batch and keeps it on every restart: the state files are hashed
+into that many partitions, so a checkpoint created under another setting
+resumes with its own count.
 """
 
 from __future__ import annotations
@@ -22,10 +42,7 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
-def get_spark(
-    app_name: str = "mapreducer-pi-cs4433-spark",
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "mapreducer-pi-cs4433-spark") -> SparkSession:
     """Build (or fetch) the session.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (defaults to all cores).
@@ -33,10 +50,10 @@ def get_spark(
     local[] default is ignored via spark-submit.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    sp = shuffle_partitions or int(
+    batch_partitions = int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
     )
-    builder = (
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
@@ -46,7 +63,10 @@ def get_spark(
         # under ansi=true, and a host spark-defaults.conf flipping it
         # would change div/cast/overflow semantics (see tune_session)
         .config("spark.sql.ansi.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(sp))
+        .config(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            str(batch_partitions),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -63,15 +83,13 @@ def get_spark(
             "spark.sql.codegen.cache.maxEntries",
             os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
         )
+        .getOrCreate()
     )
-    # optional JVM flags for the local driver (e.g. a GC experiment:
-    # SPARK_GRAFT_DRIVER_JAVA_OPTS="-XX:+UseParallelGC"); empty default
-    # keeps stock behavior, and a cluster deployment sets its own via
-    # spark-submit
-    jopts = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")
-    if jopts:
-        builder = builder.config("spark.driver.extraJavaOptions", jopts)
-    return builder.getOrCreate()
+    # stream state partitions: one per core (see the module docstring)
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
+    return spark
 
 
 def tune_session(spark: SparkSession) -> SparkSession:

@@ -73,16 +73,6 @@ def write_bucketed_table(
     w.saveAsTable(table)
 
 
-def write_tsv(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """Reference-style TSV output (part-* files). single_file mirrors the
-    reference's setNumReduceTasks(1) for small results only."""
-    if single_file:
-        df = df.coalesce(1)
-    df.write.mode("overwrite").option("sep", "\t").option(
-        "timestampFormat", "yyyy-MM-dd HH:mm:ss"
-    ).csv(path)
-
-
 def write_orc(
     df: DataFrame,
     path: str,
@@ -174,12 +164,6 @@ def merge_upsert_snapshot(
     out = dest or (base_path.rstrip("/") + "__merged")
     best.select("b.p.*").write.mode("overwrite").parquet(out)
     return out
-
-
-def repartition_for_join(df: DataFrame, key: str, partitions: int) -> DataFrame:
-    """Pre-shuffle a DataFrame on its join key so several downstream joins
-    on the same key reuse one exchange (ReusedExchange in the plan)."""
-    return df.repartition(partitions, F.col(key))
 
 
 _HEX = "0123456789abcdef"

@@ -50,9 +50,13 @@ def _chunks(spark):
     return [[r for r in rows if r.event_id % 3 == i] for i in range(3)]
 
 
-@pytest.mark.parametrize("provider", ["hdfs", "rocksdb"])
+@pytest.mark.parametrize(
+    "provider,ckpt_partitions",
+    [("hdfs", None), ("rocksdb", None), ("hdfs", 32), ("rocksdb", 32)],
+    ids=["hdfs", "rocksdb", "hdfs-ckpt32", "rocksdb-ckpt32"],
+)
 def test_stream_hll_registers_match_reference_across_restarts(
-    spark, provider
+    spark, provider, ckpt_partitions
 ):
     """Three chunks, each its own query run against the SAME checkpoint
     (two full restarts with state recovery): the final snapshot per type
@@ -60,7 +64,10 @@ def test_stream_hll_registers_match_reference_across_restarts(
     ingested — bit-for-bit, through the typed-array state round trip —
     plus exact n_rows_seen, the exact integer harmonic sum recomputable
     from those registers, and an estimate inside the batch entry's
-    band. Emissions are monotone in n_rows_seen."""
+    band. Emissions are monotone in n_rows_seen. With ckpt_partitions
+    set, the first chunk creates the checkpoint under that many shuffle
+    partitions and the restarts run under the session default: the
+    checkpoint keeps its own count and the registers stay exact."""
     from mapreducer_pi_cs4433_spark.session import enable_rocksdb_state
 
     chunks = _chunks(spark)
@@ -68,10 +75,14 @@ def test_stream_hll_registers_match_reference_across_restarts(
     ckpt = tempfile.mkdtemp(prefix="hd_ck_")
     acc: list = []
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
+    session_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    state_partitions = []
     if provider == "rocksdb":
         enable_rocksdb_state(spark)
     try:
-        for chunk in chunks:
+        for i, chunk in enumerate(chunks):
+            if ckpt_partitions and i == 0:
+                spark.conf.set("spark.sql.shuffle.partitions", str(ckpt_partitions))
             spark.createDataFrame(
                 [(r.event_type, int(r.user_id)) for r in chunk],
                 "event_type string, user_id long",
@@ -91,6 +102,12 @@ def test_stream_hll_registers_match_reference_across_restarts(
                 .start()
             )
             q.awaitTermination(300)
+            spark.conf.set("spark.sql.shuffle.partitions", session_partitions)
+            state_partitions.append(
+                q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+            )
+        want = ckpt_partitions or spark.sparkContext.defaultParallelism
+        assert state_partitions == [want] * len(chunks)
         assert acc, "no snapshots emitted"
         truth_rows: dict[str, list[int]] = {}
         for chunk in chunks:
@@ -121,6 +138,7 @@ def test_stream_hll_registers_match_reference_across_restarts(
             assert len(seen) >= 2, t  # mid-stream snapshots existed
             assert seen == sorted(seen), t
     finally:
+        spark.conf.set("spark.sql.shuffle.partitions", session_partitions)
         if provider == "rocksdb":
             if prev is None:
                 spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
